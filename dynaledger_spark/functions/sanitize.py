@@ -9,14 +9,26 @@ the serialization loop.
 from __future__ import annotations
 
 import math
+import weakref
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+# Frames sanitize_floats produced: sanitizing one again returns it as is,
+# so a caller that re-wraps a prepared frame keeps its planned
+# QueryExecution instead of analysing and planning a fresh Project.
+_SANITIZED: weakref.WeakSet[DataFrame] = weakref.WeakSet()
+
+
 def sanitize_floats(df: DataFrame) -> DataFrame:
-    """NaN/±Inf in any double/float column → NULL (JSON-safe)."""
+    """NaN/±Inf in any double/float column → NULL (JSON-safe).
+
+    Idempotent and free on its own output: ``sanitize_floats(s) is s``
+    for any ``s`` it returned."""
+    if df in _SANITIZED:
+        return df
     cols = []
     for field in df.schema.fields:
         if isinstance(field.dataType, (T.DoubleType, T.FloatType)):
@@ -28,7 +40,9 @@ def sanitize_floats(df: DataFrame) -> DataFrame:
             )
         else:
             cols.append(F.col(field.name))
-    return df.select(*cols)
+    out = df.select(*cols)
+    _SANITIZED.add(out)
+    return out
 
 
 def sanitize_rows(rows: list[dict]) -> list[dict]:

@@ -32,14 +32,18 @@ persistent RDDs once the results are dropped.
 from __future__ import annotations
 
 import weakref
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame
 
-# Collection bucket for the outermost in-flight registry build.  Builds
-# are synchronous and the harnesses run queries sequentially; a nested
-# build (builder calling another builder) must NOT start its own bucket
-# — the outermost result owns the release of everything beneath it.
-_STACK: list[list[DataFrame]] = []
+# Collection bucket for the outermost in-flight registry build of the
+# current thread (or asyncio task): concurrent builds on other threads
+# collect into their own buckets.  A nested build (builder calling
+# another builder) must NOT start its own bucket — the outermost result
+# owns the release of everything beneath it.
+_BUCKET: ContextVar[list[DataFrame] | None] = ContextVar(
+    "dynaledger_persist_bucket", default=None
+)
 
 
 def tracked_persist(df: DataFrame, level=None) -> DataFrame:
@@ -47,16 +51,17 @@ def tracked_persist(df: DataFrame, level=None) -> DataFrame:
     registry build's result.  Outside a registry build (direct operator
     use) it is exactly persist() — the caller owns the lifecycle."""
     out = df.persist(level) if level is not None else df.persist()
-    if _STACK:
-        _STACK[0].append(out)
+    bucket = _BUCKET.get()
+    if bucket is not None:
+        bucket.append(out)
     return out
 
 
 def begin_build() -> bool:
     """Open a collection bucket; True iff this build is the outermost."""
-    if _STACK:
+    if _BUCKET.get() is not None:
         return False
-    _STACK.append([])
+    _BUCKET.set([])
     return True
 
 
@@ -64,7 +69,9 @@ def end_build(outermost: bool) -> list[DataFrame]:
     """Close the bucket opened by the matching begin_build."""
     if not outermost:
         return []
-    return _STACK.pop()
+    bucket = _BUCKET.get()
+    _BUCKET.set(None)
+    return bucket
 
 
 def _release(persisted: list[DataFrame]) -> None:

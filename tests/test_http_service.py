@@ -5,13 +5,17 @@ an ephemeral port, asserting parity with direct engine calls."""
 from __future__ import annotations
 
 import json
+import sys
+import threading
 import urllib.error
 import urllib.parse
 import urllib.request
 
 import pytest
+from pyspark.sql import functions as F
 
 from dynaledger_spark.api import SecEngine
+from dynaledger_spark.functions.sanitize import sanitize_floats
 from dynaledger_spark.http_service import SecHttpService
 from dynaledger_spark.sources.tsv import ROW_ID, ingest_quarter
 from tests.sec_fixtures import Q, write_fixtures
@@ -139,3 +143,117 @@ def test_unknown_route_is_404(service):
     with pytest.raises(urllib.error.HTTPError) as e:
         _get(svc, "/nope")
     assert e.value.code == 404
+
+
+# ---------------------------------------------------------------------------
+# Prepared plans: fixed-shape routes build their frame once per key
+# ---------------------------------------------------------------------------
+BS_RAW = "/get-financial-data?year=2023&quarter=Q1&data_type=Balance%20Sheet&source=RAW"
+
+
+def _copy(eng: SecEngine) -> SecEngine:
+    fresh = SecEngine(eng.spark)
+    for name, df in eng.tables.items():
+        fresh.register(name, df)
+    return fresh
+
+
+def test_prepared_statement_is_reused(service):
+    _, eng = service
+    eng = _copy(eng)
+    df = eng.financial_data_frame(2023, "Q1", "Balance Sheet", "RAW")
+    assert eng.financial_data_frame(2023, "Q1", "Balance Sheet", "RAW") is df
+    assert eng.financial_data_frame(2023, "1", "Balance Sheet", "RAW") is df
+    # re-wrapping the prepared frame keeps its plan
+    assert sanitize_floats(df) is df
+    assert eng.financial_data_frame(2023, "Q1", "Cash Flow", "RAW") is not df
+
+
+def test_prepared_statement_concurrent_first_requests(service):
+    _, eng = service
+    eng = _copy(eng)
+    svc = SecHttpService(eng).start()
+    start = threading.Barrier(8, timeout=60)
+    bodies: list = [None] * 8
+
+    def hit(i: int) -> None:
+        start.wait()
+        bodies[i] = _get(svc, BS_RAW)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=hit, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+        svc.stop()
+    assert not any(t.is_alive() for t in threads)
+    assert all(status == 200 for status, _ in bodies)
+    fresh = sanitize_floats(eng._statement_frame(2023, "1", "Balance Sheet", "RAW"))
+    want = json.loads(json.dumps([r.asDict() for r in fresh.collect()], default=str))
+    assert want
+    assert all(out["data"] == want for _, out in bodies)
+    # racing first builds keep one frame
+    keys = [k for k in eng._prepared if k[0] == "statement"]
+    assert keys == [("statement", 2023, "1", "Balance Sheet", "RAW")]
+
+
+def test_register_drops_prepared_plans(service):
+    _, eng = service
+    eng = _copy(eng)
+    assert eng.get_financial_data(2023, "Q1", "Balance Sheet", "RAW")["data"]
+    assert eng.check_availability(2023, "Q1") == {"available": True}
+    assert len(eng.table_info(["sec_sub"])[0]["sample_data"]) == 3
+
+    pre, tag, sub = (eng.tables[n] for n in ("sec_pre", "sec_tag", "sec_sub"))
+    eng.register("sec_pre", pre.filter(F.col("stmt") != "BS"))
+    eng.register("sec_sub", sub.limit(1))
+    assert eng.get_financial_data(2023, "Q1", "Balance Sheet", "RAW")["data"] == []
+    assert ("statement", 2023, "1", "Balance Sheet", "RAW") in eng._prepared
+    assert len(eng.table_info(["sec_sub"])[0]["sample_data"]) == 1
+    eng.register("sec_tag", tag.filter(F.col("source_file") != "2023Q1"))
+    assert eng.check_availability(2023, "Q1") == {"available": False}
+
+
+def test_bad_statement_request_is_400_and_not_prepared(service):
+    svc, eng = service
+    for path in (
+        BS_RAW.replace("Balance%20Sheet", "Bogus"),
+        BS_RAW.replace("source=RAW", "source=BOGUS"),
+    ):
+        with pytest.raises(urllib.error.HTTPError) as e:
+            _get(svc, path)
+        assert e.value.code == 400
+    assert not [k for k in eng._prepared if "Bogus" in k or "BOGUS" in k]
+
+
+def test_unregistered_quarters_are_not_prepared(service):
+    _, eng = service
+    eng = _copy(eng)
+    assert eng.get_financial_data(2023, "Q1", "Balance Sheet", "RAW")["data"]
+    assert eng.check_availability(2023, "Q1") == {"available": True}
+    before = set(eng._prepared)
+    for year in (1999, 2024, 2031):
+        assert eng.check_availability(year, "Q4") == {"available": False}
+        assert eng.get_financial_data(year, "Q4", "Balance Sheet", "RAW")["data"] == []
+        with pytest.raises(KeyError):
+            eng.financial_data_frame(year, "Q4", "Balance Sheet", "FACT TABLES")
+    assert set(eng._prepared) == before
+
+
+def test_bad_quarter_is_400_and_not_prepared(service):
+    svc, eng = service
+    before = set(eng._prepared)
+    for path in (
+        BS_RAW.replace("quarter=Q1", "quarter=Qzzz"),
+        BS_RAW.replace("quarter=Q1", "quarter=Q5"),
+        "/check-availability?source=RAW&year=2023&quarter=Q0",
+    ):
+        with pytest.raises(urllib.error.HTTPError) as e:
+            _get(svc, path)
+        assert e.value.code == 400
+    assert set(eng._prepared) == before

@@ -929,6 +929,53 @@ def test_unpersist_discipline(spark, sf_dir):
     )
 
 
+def test_concurrent_builds_release_only_their_own_persists(spark):
+    """Two registry builds in flight on two threads collect their
+    tracked_persist frames into separate buckets: dropping one result
+    releases its own persists and leaves the other build's cached."""
+    import gc
+    import threading
+
+    from dynaledger_spark.plans import cache
+
+    both_open = threading.Barrier(2, timeout=60)
+    built: dict[str, tuple] = {}
+
+    def build(name: str, n: int) -> None:
+        outermost = cache.begin_build()
+        both_open.wait()
+        try:
+            kept = cache.tracked_persist(spark.range(n))
+            both_open.wait()
+        finally:
+            persisted = cache.end_build(outermost)
+        result = cache.attach_release(kept.selectExpr("id + 1 AS v"), persisted)
+        built[name] = (outermost, persisted, kept, result)
+
+    threads = [
+        threading.Thread(target=build, args=(name, n))
+        for name, n in (("a", 7), ("b", 11))
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    assert not any(t.is_alive() for t in threads)
+    assert built["a"][:2] == (True, [built["a"][2]])
+    assert built["b"][:2] == (True, [built["b"][2]])
+    kept_a, kept_b = built["a"][2], built["b"][2]
+    assert kept_a.is_cached and kept_b.is_cached
+
+    result_a = built.pop("a")[3]
+    del result_a
+    gc.collect()
+    assert kept_a.storageLevel.useMemory is False
+    assert kept_b.storageLevel.useMemory is True
+    del built
+    gc.collect()
+    assert kept_b.storageLevel.useMemory is False
+
+
 def test_regression_reenters_window():
     """ADVICE r9 item 1: a query whose LATEST driver record is a failure
     must sort as never-verified (tier 1) even if an older round was

@@ -275,6 +275,18 @@ def test_api_table_info(spark, tables):
     assert {"name", "type"} <= set(info[0]["columns"][0])
 
 
+def test_sanitize_floats_nulls_non_finite_and_is_idempotent(spark):
+    from dynaledger_spark.functions.sanitize import sanitize_floats
+
+    df = spark.createDataFrame(
+        [(1, 1.5), (2, float("nan")), (3, float("inf")), (4, float("-inf")), (5, None)],
+        "id INT, v DOUBLE",
+    )
+    once = sanitize_floats(df)
+    assert [r.v for r in once.orderBy("id").collect()] == [1.5, None, None, None, None]
+    assert sanitize_floats(once) is once
+
+
 def test_store_failures_materializes_audit_tables(spark, tables, tmp_path):
     from dynaledger_spark.functions.validation import store_failures
 
